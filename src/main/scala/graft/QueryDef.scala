@@ -16,11 +16,21 @@ final case class QueryDef(
 object QueryDef {
   /** Oracle-checked query (driver hash-compares against DuckDB). */
   def q(name: String, sql: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, Some(sql.stripMargin.trim), run)
+    QueryDef(name, Some(sql.stripMargin.trim), withFunctions(run))
 
   /** Rows-only query — semantics not expressible in DuckDB SQL
     * (e.g. engine-specific sketches); driver records a weaker check.
     */
   def qNoOracle(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, None, run)
+    QueryDef(name, None, withFunctions(run))
+
+  /** Every query can run on a session built without `GraftExtensions`: the
+    * graft_* functions it lacks are added first (a no-op on engine
+    * sessions, which have them all).
+    */
+  private def withFunctions(run: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (spark, dir) =>
+    graft.functions.GraftExpressions.register(spark)
+    run(spark, dir)
+  }
 }

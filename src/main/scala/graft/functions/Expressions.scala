@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,27 +24,44 @@ object GraftExpressions {
 
   val P = 1000000007L
 
-  /** Register all graft_* functions for use in SQL / expr() lambdas. */
+  /** The graft_* functions: SQL name, the class `DESCRIBE FUNCTION`
+    * reports, and the builder. `GraftExtensions` injects this list at
+    * session build and `register` adds it to other sessions, so the two
+    * always expose the same functions.
+    */
+  val Functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = {
+    def fn(name: String, cls: Class[_])(builder: FunctionBuilder) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    Seq(
+      fn("graft_polyhash", classOf[PolyHash])(es => PolyHash(es.head)),
+      fn("graft_minhash", classOf[MinHashSig])(es => MinHashSig(es.head)),
+      fn("graft_simhash32", classOf[SimHash32])(es => SimHash32(es.head)),
+      fn("graft_dot", classOf[DotProduct])(es => DotProduct(es(0), es(1))),
+      fn("graft_doti", classOf[DotProductInt])(es => DotProductInt(es(0), es(1))),
+      fn("graft_sqdisti", classOf[SquaredDistInt])(es => SquaredDistInt(es(0), es(1))),
+      fn("graft_detln", classOf[DetLnRat])(es => DetLnRat(es(0), es(1))),
+      fn("graft_detexp", classOf[DetExpMicro])(es => DetExpMicro(es.head)),
+      // Spark's internal bloom pair (what its own runtime filters use),
+      // surfaced as engine functions: build a filter over the small side's
+      // keys, probe it map-side on the fact side BEFORE the shuffle — the
+      // explicit form of the semi-join pruning that matters at 100 TB.
+      fn("graft_bloom_agg", classOf[BloomFilterAggregate])(es =>
+        new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()),
+      fn("graft_might_contain", classOf[BloomFilterMightContain])(es =>
+        BloomFilterMightContain(es(0), es(1))))
+  }
+
+  /** Adds the graft_* functions a session lacks (one built without
+    * `GraftExtensions`). Idempotent: a function the session already has is
+    * left as it is, so a second call replaces nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_polyhash", es => PolyHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash", es => MinHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash32", es => SimHash32(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot", es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_doti", es => DotProductInt(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sqdisti", es => SquaredDistInt(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_detln", es => DetLnRat(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_detexp", es => DetExpMicro(es.head), "built-in")
-    // Spark's internal bloom pair (what its own runtime filters use),
-    // surfaced as engine functions: build a filter over the small side's
-    // keys, probe it map-side on the fact side BEFORE the shuffle — the
-    // explicit form of the semi-join pruning that matters at 100 TB.
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        es(0), es(1)), "built-in")
+    reg.synchronized {
+      Functions.foreach { case (id, info, builder) =>
+        if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+      }
+    }
   }
 
   def polyHashBytes(s: UTF8String): Long = {

@@ -18,7 +18,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Retrieval {
 
   private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftExpressions.register(s)
     Tables.load(s, dir, name)
   }
 
@@ -614,7 +613,6 @@ object Retrieval {
         |FROM dm, df_"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val docs = T(s, dir, "documents")
       val mid = docs.agg(
         expr("(MIN(doc_id) + MAX(doc_id)) div 2").as("mid"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Prints one query's formatted physical plan (optionally only the lines
@@ -15,13 +14,7 @@ object DumpPlan {
     val name = args(0)
     val grep = if (args.length > 1) Some(args(1)) else None
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

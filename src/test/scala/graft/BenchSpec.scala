@@ -50,6 +50,21 @@ class BenchSpec extends AnyFunSuite {
     assert(!d.get("queries").has("q78_streaming_agg"))
   }
 
+  test("a failed throughput probe is named in detail; the headline stays in budget") {
+    val failedProbes = Seq("stream_entries_per_sec", "sink_append_sharded4_eps")
+    val head = Bench.headlineLine(results, -1L, 99999999L, 99999999L, -1L,
+      "/data/sf0.1", "/work/BENCH_DETAIL.json")
+    assert(head.length < 1500, s"headline line is ${head.length} chars")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val d = om.readTree(Bench.detailLine(results, -1L, 1L, 1L, -1L, "/sf",
+      probeFailed = failedProbes))
+    assert(d.get("stream_entries_per_sec").asLong() == -1L)
+    val named = d.get("probe_failed")
+    assert(named.isArray && (0 until named.size()).map(named.get(_).asText()) == failedProbes)
+    assert(om.readTree(Bench.detailLine(results, 1L, 1L, 1L, 1L, "/sf"))
+      .get("probe_failed").size() == 0)
+  }
+
   test("every headline query name is a real query") {
     val unknown = Bench.HeadlineQueries.filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"unknown headline queries: $unknown")
